@@ -23,7 +23,7 @@ same codegen expression the dedup family uses.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..materialize import materialize
@@ -261,38 +261,35 @@ def fuzzy_contamination_pairs(
     100 TB shape: both sides are signed map-only; the eval side
     (benchmarks — thousands of docs) is broadcast at band granularity,
     so the candidate match is a broadcast join with NO shuffle of the
-    training corpus; exact verification semi-joins the training side
-    down to candidates before the shingle UDF runs. ``hash`` chooses
-    md5 (oracle-parity) or xxhash64 (pure-JVM production) exactly as
-    in minhash_lsh_pairs.
+    training corpus. ``hash`` chooses md5 (oracle-parity) or xxhash64
+    (pure-JVM production) exactly as in minhash_lsh_pairs: md5 pins
+    each side's one-pass ``(id, sig, sh)`` representation
+    (dedup._md5_doc_sets) and verifies candidates against its ``sh``;
+    xxhash64 semi-joins the training side down to candidates and
+    hashes their shingles in the JVM.
     """
-    from .dedup import band_rows, minhash_signatures
-    from .hashing import hash60
+    from .dedup import (
+        _banded,
+        _md5_doc_sets,
+        _xxh_shingle_set,
+        band_rows,
+        minhash_signatures,
+    )
 
-    r = band_rows(k, bands)  # validated: r=0 would be an all-pairs join
-    tsig = minhash_signatures(
-        train, text_col, id_col, k, shingle_n, hash=hash, tokenize=tokenize
-    )
-    esig = minhash_signatures(
-        eval_df, text_col, id_col, k, shingle_n, hash=hash, tokenize=tokenize
-    )
-    if hash == "xxhash64":
-        def band_key(b):
-            return F.xxhash64(F.concat_ws(",", F.slice("sig", b * r + 1, r)), F.lit(b))
+    band_rows(k, bands)  # validated: r=0 would be an all-pairs join
+    if hash == "md5":
+        tsub = _md5_doc_sets(train, text_col, id_col, k, shingle_n, tokenize)
+        esub = _md5_doc_sets(eval_df, text_col, id_col, k, shingle_n, tokenize)
+        tsig, esig = tsub.select("id", "sig"), esub.select("id", "sig")
     else:
-        def band_key(b):
-            return hash60(F.concat_ws(",", F.slice("sig", b * r + 1, r)), 1000 + b)
-
-    def banded(sig_df: DataFrame) -> DataFrame:
-        return sig_df.select(
-            "id",
-            F.posexplode(
-                F.array(*[band_key(b) for b in range(bands)])
-            ).alias("band", "bh"),
+        tsig = minhash_signatures(
+            train, text_col, id_col, k, shingle_n, hash=hash, tokenize=tokenize
         )
-
-    cand = banded(tsig).join(
-        F.broadcast(banded(esig).withColumnRenamed("id", "eval_id")),
+        esig = minhash_signatures(
+            eval_df, text_col, id_col, k, shingle_n, hash=hash, tokenize=tokenize
+        )
+    cand = _banded(tsig, k, bands, hash).join(
+        F.broadcast(_banded(esig, k, bands, hash).withColumnRenamed("id", "eval_id")),
         ["band", "bh"],
     )
     if exclude_same_id:
@@ -302,36 +299,21 @@ def fuzzy_contamination_pairs(
         # coincidental id collision must NOT suppress a real
         # contamination pair, so the default keeps every pair.
         cand = cand.filter(F.col("id") != F.col("eval_id"))
-    cand = (
-        cand.select(F.col("id").alias("train_id"), "eval_id")
-        .distinct()
-        .transform(materialize)  # verify branches reuse, not re-derive
-    )
-    # r15 opt: verify shingle sets as pure-JVM codegen expressions —
-    # distinct HASHED shingles instead of the Python string-set UDF
-    # (the same rewrite as minhash_lsh_pairs' verify stage). Drops the
-    # second Arrow crossing and the verify join compares 8-byte longs
-    # instead of shingle strings. |∩|/|∪| over hashed sets equals the
-    # string-set Jaccard barring a 60-bit collision inside one pair's
-    # union (~1e-14 — the documented engine-wide posture).
-    from .dedup import _shingles_expr
-
-    hash_g = (
-        (lambda g: F.xxhash64(g)) if hash == "xxhash64" else (lambda g: hash60(g, 0))
-    )
-
-    def sh_set(c: Column) -> Column:
-        return F.array_distinct(F.transform(_shingles_expr(c, shingle_n, tokenize), hash_g))
-
-    t_ids = cand.select(F.col("train_id").alias("id")).distinct()
-    tsh = (
-        train.select(F.col(id_col).alias("train_id"), F.col(text_col).alias("_t"))
-        .join(t_ids.withColumnRenamed("id", "train_id"), "train_id", "left_semi")
-        .select("train_id", sh_set(F.col("_t")).alias("tsh"))
-    )
-    esh = eval_df.select(
-        F.col(id_col).alias("eval_id"), sh_set(F.col(text_col)).alias("esh")
-    )
+    cand = cand.select(F.col("id").alias("train_id"), "eval_id").distinct()
+    if hash == "md5":
+        tsh = tsub.select(F.col("id").alias("train_id"), F.col("sh").alias("tsh"))
+        esh = esub.select(F.col("id").alias("eval_id"), F.col("sh").alias("esh"))
+    else:
+        cand = cand.transform(materialize)  # verify branches reuse, not re-derive
+        t_ids = cand.select(F.col("train_id").alias(id_col)).distinct()
+        tsh = train.join(t_ids, id_col, "left_semi").select(
+            F.col(id_col).alias("train_id"),
+            _xxh_shingle_set(F.col(text_col), shingle_n, tokenize).alias("tsh"),
+        )
+        esh = eval_df.select(
+            F.col(id_col).alias("eval_id"),
+            _xxh_shingle_set(F.col(text_col), shingle_n, tokenize).alias("esh"),
+        )
     inter = F.size(F.array_intersect("tsh", "esh"))
     return (
         cand.join(tsh, "train_id")

@@ -64,6 +64,26 @@ def band_rows(k: int, bands: int) -> int:
     return k // bands
 
 
+def band_keys(sig: str, k: int, bands: int, hash: str = "md5") -> Column:
+    """The array of ``bands`` LSH bucket keys of a k-long signature
+    column, one per band: the hash of the band's comma-joined
+    signature slice, salted by the band index. The md5 engine's key is
+    the portable ``hash60`` (seeded 1000 plus the band index — the
+    DuckDB oracle replays it); the xxhash64 engine's needs no oracle
+    parity and stays JVM-native. NULL for a NULL signature (a doc
+    without shingles), so exploding it gives that doc no band rows and
+    it never becomes a candidate. Every banded MinHash consumer
+    (single, dual, fuzzy decontamination, streaming near-dup) builds
+    its keys here, so the constructions cannot drift apart."""
+    r = band_rows(k, bands)
+    slices = [F.concat_ws(",", F.slice(sig, b * r + 1, r)) for b in range(bands)]
+    if hash == "xxhash64":
+        keys = [F.xxhash64(s, F.lit(b)) for b, s in enumerate(slices)]
+    else:
+        keys = [hash60(s, 1000 + b) for b, s in enumerate(slices)]
+    return F.when(F.col(sig).isNotNull(), F.array(*keys))
+
+
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Keep the lowest-id representative of each normalized-content group.
 
@@ -138,101 +158,57 @@ def _md5_h60_batch(sh_lists: list[list[str]]) -> dict[str, int]:
     return memo
 
 
-def _hashed_shingles_udf(
-    shingle_n: int, tokenize: str = "word", dedupe: str = "hash"
-):
-    """Distinct hash60(seed 0) shingle set per doc, Arrow-batched — the
-    md5-engine verify-stage kernel (r15 opt, second pass). The JVM
-    ``array_distinct(transform(shingles, hash60))`` expression it
-    replaces computes an md5 + string concat per gram OCCURRENCE inside
-    an interpreted HOF lambda (HOFs never codegen); this kernel hashes
-    each DISTINCT shingle once per Arrow batch (:func:`_md5_h60_batch`
-    — clique members share their whole shingle set and sit in the same
-    batch, so a c-doc clique pays 1× the md5 work, not c×). Measured
-    2× faster warm on the cjk verify pin at sf0.1 with the set output
-    proven identical element-for-element (test_hashed_shingles_udf
-    pins the JVM-expression parity over the NULL/empty/whitespace/CJK
-    edge battery). Set semantics match the JVM expression: empty/NULL
-    text → []; element order differs (first-occurrence-of-hash vs
-    first-occurrence-of-gram) but only |∩|/|∪| sizes are consumed.
-    Runs post-semi-join on candidates only — O(candidate docs) at
-    scale, the narrow (id, longs) crossing — distinct from the r15
-    REVERTED fused sig+hs experiment, which carried hs arrays through
-    the banding shuffle.
+def _hashed_sets_py(
+    texts: pd.Series, shingle_n: int, tokenize: str = "word"
+) -> list[list[int]]:
+    """Per doc of an Arrow batch, its distinct hash60 (seed 0) shingle
+    values in first-occurrence-of-hash order — [] for an empty/NULL or
+    < shingle_n-token doc. Deduping on the HASH value (not the
+    shingle) matches the JVM ``array_distinct(transform(sh, hash60))``
+    bit-for-bit, including the ~2⁻⁶⁰ collision edge (a collision
+    dedupes); ``test_hashed_shingles_udf_matches_jvm_expr`` pins it."""
+    sh_lists = [_shingles_py(t or "", shingle_n, tokenize) for t in texts]
+    memo = _md5_h60_batch(sh_lists)
+    return [list(dict.fromkeys(memo[s] for s in sh)) for sh in sh_lists]
 
-    ``dedupe`` names the distinct key, matching the JVM construction
-    each call site replaces bit-for-bit INCLUDING the ~2⁻⁶⁰ collision
-    edge: ``"hash"`` ≙ ``array_distinct(transform(sh, hash60))``
-    (minhash verify — a collision dedupes), ``"string"`` ≙
-    ``transform(array_distinct(sh), hash60)`` (inverted-index plan and
-    its DuckDB oracle — a collision keeps both rows)."""
-    if dedupe not in ("hash", "string"):
-        raise ValueError(f"unknown dedupe key: {dedupe!r}")
-    by_string = dedupe == "string"
+
+def _affine_min(k: int):
+    """The MinHash signature arithmetic both md5 kernels share: a
+    doc's distinct hash60 list → its k-long signature, the affine
+    family evaluated as one numpy broadcast ``(A·h0 + B) & mask`` with
+    an axis-min — replacing ~k×|shingles| interpreted HOF lambda steps
+    per document (measured ~1 ms/doc → ~30 µs/doc). h0 is folded below
+    H0_MOD so A·h0 + B stays under 2^60 in int64."""
+    a_c, b_c = affine_consts(k)
+    A = np.array(a_c, dtype=np.int64)[:, None]
+    B = np.array(b_c, dtype=np.int64)[:, None]
+
+    def sig(hs: list[int]) -> list[int]:
+        h0 = np.fromiter(hs, dtype=np.int64, count=len(hs)) % H0_MOD
+        return ((A * h0[None, :] + B) & REHASH_MASK).min(axis=1).tolist()
+
+    return sig
+
+
+def _hashed_shingles_udf(shingle_n: int, tokenize: str = "word"):
+    """Hash60(seed 0) of each DISTINCT shingle STRING per doc,
+    Arrow-batched — the inverted-index plan's (``candidates="all"``)
+    kernel, ≙ ``transform(array_distinct(sh), hash60)`` in
+    first-occurrence-of-string order: its DuckDB oracle's exact
+    list_distinct(strings)-then-hash construction, so a ~2⁻⁶⁰
+    collision keeps both rows, exactly as the oracle does. Each
+    distinct shingle of the batch is md5'd once (:func:`_md5_h60_batch`
+    — clique members share their whole shingle set and sit in the same
+    batch, so a c-doc clique pays 1× the md5 work, not c×), instead of
+    the interpreted per-occurrence md5 + string concat a JVM
+    ``transform(hash60)`` HOF lambda pays (HOFs never codegen).
+    Empty/NULL text → []."""
 
     @F.pandas_udf("array<long>")
     def _hs(texts: pd.Series) -> pd.Series:
         sh_lists = [_shingles_py(t or "", shingle_n, tokenize) for t in texts]
         memo = _md5_h60_batch(sh_lists)
-        if by_string:
-            out = [
-                [memo[s] for s in dict.fromkeys(sh)] if sh else []
-                for sh in sh_lists
-            ]
-        else:
-            out = [
-                list(dict.fromkeys(memo[s] for s in sh)) if sh else []
-                for sh in sh_lists
-            ]
-        return pd.Series(out)
-
-    return _hs
-
-
-def _minhash_sig_from_sh_udf(k: int):
-    """Signature kernel over a PRE-SHINGLED column (r16, r15 verdict
-    #3 — the shared-shingle dual-engine plan): identical body to
-    :func:`_minhash_sig_udf` except the shingle lists arrive as an
-    ``array<string>`` column (the pinned JVM ``_shingles_expr`` output)
-    instead of being recomputed from text in Python. Bit-identical
-    output given equal shingle lists — which the
-    ``test_hashed_shingles_udf`` battery pins for both tokenizers."""
-    a_c, b_c = affine_consts(k)
-    A = np.array(a_c, dtype=np.int64)[:, None]
-    B = np.array(b_c, dtype=np.int64)[:, None]
-
-    @F.pandas_udf("array<long>")
-    def _sig(shs: pd.Series) -> pd.Series:
-        sh_lists = [list(s) if s is not None else [] for s in shs]
-        memo = _md5_h60_batch(sh_lists)
-        out = []
-        for sh in sh_lists:
-            if not sh:
-                out.append(None)
-                continue
-            hs = dict.fromkeys(memo[s] for s in sh)
-            h0 = np.fromiter(hs, dtype=np.int64, count=len(hs)) % H0_MOD
-            out.append(((A * h0[None, :] + B) & REHASH_MASK).min(axis=1).tolist())
-        return pd.Series(out)
-
-    return _sig
-
-
-def _hashed_from_sh_udf():
-    """Distinct hash60(seed 0) set from a pre-shingled column — the
-    verify-set kernel of the dual-engine plan; same dedupe-by-hash
-    semantics as ``_hashed_shingles_udf(dedupe="hash")``."""
-
-    @F.pandas_udf("array<long>")
-    def _hs(shs: pd.Series) -> pd.Series:
-        sh_lists = [list(s) if s is not None else [] for s in shs]
-        memo = _md5_h60_batch(sh_lists)
-        return pd.Series(
-            [
-                list(dict.fromkeys(memo[s] for s in sh)) if sh else []
-                for sh in sh_lists
-            ]
-        )
+        return pd.Series([[memo[s] for s in dict.fromkeys(sh)] for sh in sh_lists])
 
     return _hs
 
@@ -240,72 +216,77 @@ def _hashed_from_sh_udf():
 def _sig_and_hashed_shingles_udf(k: int, shingle_n: int, tokenize: str = "word"):
     """One Arrow pass producing BOTH the k-long MinHash signature and
     the doc's distinct hashed shingle set (full 60-bit hash60 — no
-    H0_MOD fold, minimizing collision odds): the md5 per shingle is
-    computed once per DISTINCT shingle per batch (see
-    :func:`_md5_h60_batch`) and feeds both outputs. Used by the
-    exact-verify near-dup paths that carry the shingle set through a
-    join — hashed 8-byte elements instead of shingle strings is ~10×
-    narrower join state, and deriving them here avoids both a second
-    Arrow pass and ~|corpus|×|shingles| JVM md5 calls a post-hoc
-    transform would cost (measured r8: the transform variant was +40%
-    wall at sf10)."""
-    a_c, b_c = affine_consts(k)
-    A = np.array(a_c, dtype=np.int64)[:, None]
-    B = np.array(b_c, dtype=np.int64)[:, None]
+    H0_MOD fold, minimizing collision odds; :func:`_hashed_sets_py`):
+    the md5 per shingle is computed once per DISTINCT shingle per
+    batch and feeds both outputs. This is the md5 engine's
+    per-document representation (:func:`_md5_doc_sets` pins it):
+    hashed 8-byte elements instead of shingle strings is ~10× narrower
+    join state, and deriving them here avoids both a second Arrow pass
+    and ~|corpus|×|shingles| JVM md5 calls a post-hoc transform would
+    cost (measured r8: the transform variant was +40% wall at sf10).
+    A doc without shingles gets a NULL sig and an empty set."""
+    sig = _affine_min(k)
 
     @F.pandas_udf("sig array<long>, hs array<long>")
     def _both(texts: pd.Series) -> pd.DataFrame:
-        sh_lists = [_shingles_py(t or "", shingle_n, tokenize) for t in texts]
-        memo = _md5_h60_batch(sh_lists)
+        hs_col = _hashed_sets_py(texts, shingle_n, tokenize)
         # two column lists, not a list of per-row dicts: building the
         # return frame row-dict-wise made pandas re-infer each row and
         # dominated the batch at 10× corpus scale (r16)
-        sig_col: list = []
-        hs_col: list = []
-        for sh in sh_lists:
-            if not sh:
-                sig_col.append(None)
-                hs_col.append(None)
-                continue
-            # dedupe on the HASH VALUE (not the shingle) to keep the
-            # legacy first-occurrence order even under a 2^-60 collision
-            hs = list(dict.fromkeys(memo[s] for s in sh))
-            h0 = np.fromiter(hs, dtype=np.int64, count=len(hs)) % H0_MOD
-            sig_col.append(((A * h0[None, :] + B) & REHASH_MASK).min(axis=1).tolist())
-            hs_col.append(hs)
+        sig_col = [sig(hs) if hs else None for hs in hs_col]
         return pd.DataFrame({"sig": sig_col, "hs": hs_col})
 
     return _both
 
 
 def _minhash_sig_udf(k: int, shingle_n: int, tokenize: str = "word"):
-    """Arrow-batched signature computation. hashlib md5 produces the
-    identical base hash to the JVM/DuckDB expression; the affine family
-    is evaluated as one numpy broadcast (A[:,None]*h0 + B[:,None]) & mask
-    with an axis-min — replacing ~k×|shingles| interpreted HOF lambda
-    steps per document (measured ~1 ms/doc → ~30 µs/doc). Each DISTINCT
-    shingle in the batch is hashed once (:func:`_md5_h60_batch` — the
-    signature min is unchanged by duplicate shingles, within a doc or
-    across clique members)."""
-    a_c, b_c = affine_consts(k)
-    A = np.array(a_c, dtype=np.int64)[:, None]
-    B = np.array(b_c, dtype=np.int64)[:, None]
+    """Arrow-batched signature-only kernel (the signature-only callers:
+    :func:`minhash_signatures` and the neardup ``verify="estimate"``
+    mode). hashlib md5 produces the identical base hash to the
+    JVM/DuckDB expression; each DISTINCT shingle in the batch is
+    hashed once (the signature min is unchanged by duplicate
+    shingles, within a doc or across clique members)."""
+    sig = _affine_min(k)
 
     @F.pandas_udf("array<long>")
     def _sig(texts: pd.Series) -> pd.Series:
-        sh_lists = [_shingles_py(t or "", shingle_n, tokenize) for t in texts]
-        memo = _md5_h60_batch(sh_lists)
-        out = []
-        for sh in sh_lists:
-            if not sh:
-                out.append(None)
-                continue
-            hs = dict.fromkeys(memo[s] for s in sh)
-            h0 = np.fromiter(hs, dtype=np.int64, count=len(hs)) % H0_MOD
-            out.append(((A * h0[None, :] + B) & REHASH_MASK).min(axis=1).tolist())
-        return pd.Series(out)
+        hs_col = _hashed_sets_py(texts, shingle_n, tokenize)
+        return pd.Series([sig(hs) if hs else None for hs in hs_col])
 
     return _sig
+
+
+def _md5_doc_sets(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int,
+    shingle_n: int,
+    tokenize: str = "word",
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """The md5 engine's ONE per-document representation:
+    ``(id, *carry, sig, sh)`` — the k-long MinHash signature and the
+    distinct hash60 shingle set from one Arrow pass
+    (:func:`_sig_and_hashed_shingles_udf`), pinned once on a batch
+    frame (a stream cannot be pinned and is returned as is). Every md5
+    consumer reads this pin: banding selects ``(id, sig)`` BEFORE its
+    explode, so no shingle array rides the banding shuffle (the r15
+    finding), and exact verification reads ``sh`` from the same pin
+    instead of re-shingling the candidates. A doc without shingles
+    keeps its row with a NULL sig (:func:`band_keys` gives it no band
+    rows): a NULL filter here would be pushed below the projection and
+    run the UDF a second time. Fans out BELOW the Arrow pass (no-op at
+    real scale — see similarity.ensure_parallelism)."""
+    from .similarity import ensure_parallelism
+
+    both = _sig_and_hashed_shingles_udf(k, shingle_n, tokenize)
+    out = (
+        ensure_parallelism(df)
+        .select(F.col(id_col).alias("id"), *carry, both(F.col(text_col)).alias("_sg"))
+        .select("id", *carry, F.col("_sg.sig").alias("sig"), F.col("_sg.hs").alias("sh"))
+    )
+    return out if out.isStreaming else materialize(out)
 
 
 def _shingles_expr(
@@ -465,6 +446,69 @@ def minhash_signatures(
     )
 
 
+def _xxh_shingle_set(text: Column, shingle_n: int, tokenize: str) -> Column:
+    """The xxhash64 engine's verify set: distinct xxhash64 of each
+    shingle, pure JVM (xxhash64 is a cheap native function; that
+    engine's whole posture is zero Python workers)."""
+    return F.array_distinct(
+        F.transform(_shingles_expr(text, shingle_n, tokenize), lambda g: F.xxhash64(g))
+    )
+
+
+def _xxh_candidate_sets(
+    df: DataFrame, cand: DataFrame, text_col: str, id_col: str,
+    shingle_n: int, tokenize: str,
+) -> DataFrame:
+    """Pinned ``(id, sh)`` xxhash64 verify sets for the docs of the
+    candidate pairs only — the corpus is semi-joined down to candidate
+    ids first (candidates ≪ corpus at scale, so the verify join state
+    is O(candidate docs))."""
+    ids = cand.select(F.explode(F.array("id_a", "id_b")).alias(id_col)).distinct()
+    return (
+        df.join(ids, id_col, "left_semi")
+        .select(
+            F.col(id_col).alias("id"),
+            _xxh_shingle_set(F.col(text_col), shingle_n, tokenize).alias("sh"),
+        )
+        .transform(materialize)
+    )
+
+
+def _banded(sigs: DataFrame, k: int, bands: int, hash: str, *tag: Column) -> DataFrame:
+    """``(*tag, id, band, bh)``: one row per (doc, band) of an
+    ``(id, sig)`` frame, keyed by :func:`band_keys`. Select only
+    ``(id, sig)`` upstream — whatever else the frame carries rides the
+    banding shuffle ``bands`` times."""
+    return sigs.select(
+        *tag,
+        "id",
+        F.posexplode(band_keys("sig", k, bands, hash)).alias("band", "bh"),
+    )
+
+
+def _verified_pairs(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+    """Exact Jaccard of candidate pairs ``(id_a, id_b)`` over the
+    hashed shingle sets ``sh = (id, sh)``, kept at ≥ threshold.
+    |∩|/|∪| over hashed sets equals the string-set Jaccard barring a
+    60-bit collision inside one pair's union (~|union|²/2^61 ≈ 1e-14 —
+    the engine-wide posture, oracle-pinned); the pair join compares
+    8-byte longs, ~10× narrower state than shingle strings."""
+    a, b = sh.alias("a"), sh.alias("b")
+    return (
+        cand.join(a, F.col("id_a") == F.col("a.id"))
+        .join(b, F.col("id_b") == F.col("b.id"))
+        .select(
+            "id_a",
+            "id_b",
+            (
+                F.size(F.array_intersect("a.sh", "b.sh")).cast("double")
+                / F.size(F.array_union("a.sh", "b.sh"))
+            ).alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -492,56 +536,48 @@ def minhash_lsh_pairs(
     IDENTICAL to the unsalted plan (pinned by test).
 
     Stages (2 shuffles total, both on uniform keys):
-      1. signatures (map-only)
-      2. explode into ``bands`` rows/doc keyed by (band_idx, hash of the
-         band's signature slice) → self equi-join → distinct pairs
-      3. exact Jaccard verification on the candidates only (inverted
-         n-gram join restricted to candidate pairs)
+      1. per-doc representation, pinned. md5: ONE Arrow pass yields
+         ``(id, sig, sh)`` (:func:`_md5_doc_sets`); xxhash64: the
+         pure-JVM signatures (:func:`_minhash_sigs_jvm`)
+      2. explode ``(id, sig)`` into ``bands`` rows/doc keyed by
+         (band_idx, :func:`band_keys`) → self equi-join → distinct
+         pairs, pinned
+      3. exact Jaccard over the candidates' hashed shingle sets
+         (:func:`_verified_pairs`). md5 reads ``sh`` from the stage-1
+         pin; xxhash64 semi-joins the corpus down to candidate ids and
+         hashes their shingles in the JVM
 
     Returns (id_a, id_b, jaccard) with id_a < id_b and jaccard ≥
     threshold. At 100 TB the band join's key space is uniform (md5),
     so no salting needed; r=k/bands rows per band tunes the S-curve.
     """
+    from .banding import salted_band_pairs
     from .similarity import ensure_parallelism
     from .text_analysis import check_tokenize
 
     check_tokenize(tokenize)
-    r = band_rows(k, bands)
-    # fan out ONCE here, before any text projection: both the signature
-    # pass and the exact-verify shingle pass below consume `df`, and a
-    # 1-split local input would otherwise run each branch's per-doc
-    # Python work on a single task (the signature path's internal
-    # ensure_parallelism fans out ABOVE its projection, which leaves a
-    # caller-supplied synth/text expression on the scan task). The
-    # marker makes the inner calls no-ops — exactly one round-robin
-    # exchange, still a no-op at real scale.
+    band_rows(k, bands)  # refuse before any pin runs
+    # fan out ONCE here, before any text projection: both the
+    # representation pass and the xxhash64 verify pass consume `df`,
+    # and a 1-split local input would otherwise run each branch's
+    # per-doc work on a single task. The marker makes the inner calls
+    # no-ops — exactly one round-robin exchange, still a no-op at real
+    # scale.
     df = ensure_parallelism(df)
-    sigs = minhash_signatures(
-        df, text_col, id_col, k, shingle_n, hash=hash, tokenize=tokenize
-    )
-    if hash == "xxhash64":
-        # band key needs no oracle parity — keep the production path
-        # fully JVM-native (one xxhash64 per band, no md5 anywhere)
-        def band_key(b):
-            return F.xxhash64(F.concat_ws(",", F.slice("sig", b * r + 1, r)), F.lit(b))
+    if hash == "md5":
+        sub = _md5_doc_sets(df, text_col, id_col, k, shingle_n, tokenize)
+        sigs = sub.select("id", "sig")
     else:
-        def band_key(b):
-            return hash60(F.concat_ws(",", F.slice("sig", b * r + 1, r)), 1000 + b)
-
-    # the self-join + verification would otherwise re-execute the whole
-    # signature DAG per branch; signatures are tiny (id + k longs), so
-    # materialize once (reliable-checkpoint-aware: set
-    # SPARK_GRAFT_CHECKPOINT_DIR on a cluster — see materialize.py)
-    sigs = sigs.transform(materialize)
-    banded = sigs.select(
-        "id",
-        F.posexplode(F.array(*[band_key(b) for b in range(bands)])).alias("band", "bh"),
-    )
-    from .banding import salted_band_pairs
-
+        # the self-join would otherwise re-execute the whole signature
+        # DAG per branch; signatures are tiny (id + k longs), so
+        # materialize once (reliable-checkpoint-aware: set
+        # SPARK_GRAFT_CHECKPOINT_DIR on a cluster — see materialize.py)
+        sigs = minhash_signatures(
+            df, text_col, id_col, k, shingle_n, hash=hash, tokenize=tokenize
+        ).transform(materialize)
     cand = (
         salted_band_pairs(
-            banded,
+            _banded(sigs, k, bands, hash),
             ["band", "bh"],
             id_col="id",
             max_bucket=max_bucket,
@@ -551,59 +587,11 @@ def minhash_lsh_pairs(
         .distinct()
         .transform(materialize)
     )
-    # exact-Jaccard verification only needs shingle sets for docs that
-    # survived banding — semi-join down to candidate ids first.
-    # Candidates ≪ corpus at scale, so the verify join state is
-    # O(candidate docs).
-    cand_ids = (
-        cand.select(F.col("id_a").alias("id"))
-        .union(cand.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    # r15 opt: the verify shingle sets are distinct HASHED shingles
-    # instead of the Python STRING-set UDF this stage used to run —
-    # the pair join compares 8-byte longs, ~10× narrower join state.
-    # |∩|/|∪| over hashed sets equals the string-set Jaccard barring a
-    # 60-bit collision inside one pair's union (~|union|²/2^61 ≈ 1e-14
-    # — the engine-wide posture already documented for the
-    # inverted-index join and the streaming neardup verify, both
-    # oracle-pinned). The hashing kernel is per-engine (below).
-    if hash == "xxhash64":
-        # production engine stays pure-JVM (xxhash64 is a cheap native
-        # function; the whole path's posture is zero Python workers)
-        sh_col = F.array_distinct(
-            F.transform(
-                _shingles_expr(F.col("_txt"), shingle_n, tokenize),
-                lambda g: F.xxhash64(g),
-            )
-        )
+    if hash == "md5":
+        sh = sub.select("id", "sh")
     else:
-        # md5 engine: Arrow batch kernel — hash60 per DISTINCT shingle
-        # per batch instead of an interpreted md5 per gram occurrence
-        # (see _hashed_shingles_udf; identical sets, 2× faster warm)
-        sh_col = _hashed_shingles_udf(shingle_n, tokenize)(F.col("_txt"))
-    sh = (
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_txt"))
-        .join(cand_ids, "id", "left_semi")
-        .select("id", sh_col.alias("sh"))
-        .transform(materialize)
-    )
-    a = sh.alias("a")
-    b = sh.alias("b")
-    verified = (
-        cand.join(a, F.col("id_a") == F.col("a.id"))
-        .join(b, F.col("id_b") == F.col("b.id"))
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.size(F.array_intersect("a.sh", "b.sh")).cast("double")
-                / F.size(F.array_union("a.sh", "b.sh"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return verified
+        sh = _xxh_candidate_sets(df, cand, text_col, id_col, shingle_n, tokenize)
+    return _verified_pairs(cand, sh, threshold)
 
 
 def minhash_lsh_pairs_dual(
@@ -616,103 +604,36 @@ def minhash_lsh_pairs_dual(
     threshold: float = 0.5,
     tokenize: str = "word",
 ) -> tuple[DataFrame, DataFrame]:
-    """BOTH MinHash engines — (xxhash64_pairs, md5_pairs) — over ONE
-    corpus shingle pass (r16, r15 verdict #3; the cross-engine gate
-    query ran :func:`minhash_lsh_pairs` twice and tokenized + shingled
-    the corpus independently per engine).
+    """BOTH MinHash engines — (xxhash64_pairs, md5_pairs) — with ONE
+    banding join and ONE candidate pin (r16, r15 verdict #3; the
+    cross-engine gate query ran :func:`minhash_lsh_pairs` twice).
 
-    One pinned ``(id, shingles)`` frame feeds all four consumers:
-
-    - md5 signatures: Arrow kernel over the shingle arrays
-      (:func:`_minhash_sig_from_sh_udf` — same body as the from-text
-      kernel, minus the Python re-shingling);
-    - xxhash64 signatures: explode the pinned shingles → the same
-      codegen'd affine-min aggregation :func:`_minhash_sigs_jvm`
-      builds (its shingle expression is exactly what the pin holds);
-    - ONE shared verify-set pass: the candidate-id union of both
-      engines semi-joins the pinned shingles once and computes BOTH
-      hashed-shingle sets (md5-h60 and xxhash64) in a single
-      projection — two verify passes collapse into one.
+    - md5: the pinned :func:`_md5_doc_sets` representation supplies
+      the signatures AND, at verify time, the shingle sets;
+    - xxhash64: the pure-JVM signatures (:func:`_minhash_sigs_jvm`)
+      and, for its candidates only, JVM verify sets
+      (:func:`_xxh_candidate_sets`);
+    - banding: both engines' ``(eng, id, band, bh)`` rows union into
+      ONE self-join keyed (eng, band, bh) — a pair meets only inside
+      its own engine's bucket space, so the per-engine candidate sets
+      are exactly the two separate joins'.
 
     Output is bit-identical per engine to two independent
     :func:`minhash_lsh_pairs` runs (pinned by
-    ``test_minhash_dual_matches_independent_chains``): signatures
-    depend only on the shingle SET, band keys and the verify jaccard
-    expressions are copied verbatim, and the JVM-vs-Python shingle
-    parity is the ``test_hashed_shingles_udf`` battery's standing pin.
-
-    Scale shape: the shingle pin is ~(shingle_n ×) corpus text — the
-    same order as the corpus scan each engine separately paid; at
-    100 TB the win is one full tokenize+shingle pass and one verify
-    pass instead of two of each."""
+    ``test_minhash_dual_matches_independent_chains``): the signatures,
+    band keys (:func:`band_keys`) and verify (:func:`_verified_pairs`)
+    are the same code."""
+    from .banding import salted_band_pairs
     from .similarity import ensure_parallelism
     from .text_analysis import check_tokenize
 
     check_tokenize(tokenize)
-    r = band_rows(k, bands)
+    band_rows(k, bands)
     df = ensure_parallelism(df)
-    shf = df.select(
-        F.col(id_col).alias("id"),
-        _shingles_expr(F.col(text_col), shingle_n, tokenize).alias("sh"),
-    ).transform(materialize)
-
-    # --- signatures, one per engine, both from the pinned shingles;
-    # the two (id, sig) frames are schema-identical, so ONE tagged
-    # union pin (eng 0 = xxhash64, 1 = md5) computes both engines'
-    # signature passes in a single action instead of two — locally
-    # each action is a fixed planning + job floor, at scale one
-    # checkpoint write instead of two.
-    sig_md5 = shf.select(
-        F.lit(1).alias("eng"),
-        "id",
-        _minhash_sig_from_sh_udf(k)(F.col("sh")).alias("sig"),
-    ).filter(F.col("sig").isNotNull())
-    a_c, b_c = affine_consts(k)
-    h0 = F.pmod(F.xxhash64("s"), F.lit(H0_MOD))
-    sig_xxh = (
-        shf.select("id", F.explode("sh").alias("s"))
-        .select(
-            "id",
-            *[
-                (F.lit(a_c[i]) * h0 + F.lit(b_c[i]))
-                .bitwiseAND(F.lit(REHASH_MASK))
-                .alias(f"h{i}")
-                for i in range(k)
-            ],
-        )
-        .groupBy("id")
-        .agg(*[F.min(f"h{i}").alias(f"m{i}") for i in range(k)])
-        .select(
-            F.lit(0).alias("eng"),
-            "id",
-            F.array(*[f"m{i}" for i in range(k)]).alias("sig"),
-        )
-    )
-    sig_all = sig_xxh.union(sig_md5).transform(materialize)
-
-    # --- banding: per-engine band keys (verbatim minhash_lsh_pairs,
-    # branched on the engine tag), ONE self-join keyed
-    # (eng, band, bh) — a pair meets only inside its own engine's
-    # bucket space, so the per-engine candidate sets are exactly the
-    # two separate joins' — and ONE candidate pin.
-    from .banding import salted_band_pairs
-
-    def band_key(b):
-        return F.when(
-            F.col("eng") == 0,
-            F.xxhash64(
-                F.concat_ws(",", F.slice("sig", b * r + 1, r)), F.lit(b)
-            ),
-        ).otherwise(
-            hash60(F.concat_ws(",", F.slice("sig", b * r + 1, r)), 1000 + b)
-        )
-
-    banded = sig_all.select(
-        "id",
-        "eng",
-        F.posexplode(
-            F.array(*[band_key(b) for b in range(bands)])
-        ).alias("band", "bh"),
+    sub = _md5_doc_sets(df, text_col, id_col, k, shingle_n, tokenize)
+    sig_xxh = _minhash_sigs_jvm(df, text_col, id_col, k, shingle_n, tokenize)
+    banded = _banded(sig_xxh, k, bands, "xxhash64", F.lit(0).alias("eng")).union(
+        _banded(sub.select("id", "sig"), k, bands, "md5", F.lit(1).alias("eng"))
     )
     cand_all = (
         salted_band_pairs(
@@ -725,41 +646,11 @@ def minhash_lsh_pairs_dual(
     )
     cand_xxh = cand_all.filter(F.col("eng") == 0).select("id_a", "id_b")
     cand_md5 = cand_all.filter(F.col("eng") == 1).select("id_a", "id_b")
-
-    # --- ONE verify-set pass for both engines
-    ids = cand_all.select(
-        F.explode(F.array("id_a", "id_b")).alias("id")
-    ).distinct()
-    shsets = (
-        shf.join(ids, "id", "left_semi")
-        .select(
-            "id",
-            _hashed_from_sh_udf()(F.col("sh")).alias("hs_md5"),
-            F.array_distinct(
-                F.transform("sh", lambda g: F.xxhash64(g))
-            ).alias("hs_xxh"),
-        )
-        .transform(materialize)
+    sh_xxh = _xxh_candidate_sets(df, cand_xxh, text_col, id_col, shingle_n, tokenize)
+    return (
+        _verified_pairs(cand_xxh, sh_xxh, threshold),
+        _verified_pairs(cand_md5, sub.select("id", "sh"), threshold),
     )
-
-    def _verify(cand: DataFrame, hs_col: str) -> DataFrame:
-        a = shsets.select("id", F.col(hs_col).alias("sh")).alias("a")
-        b = shsets.select("id", F.col(hs_col).alias("sh")).alias("b")
-        return (
-            cand.join(a, F.col("id_a") == F.col("a.id"))
-            .join(b, F.col("id_b") == F.col("b.id"))
-            .select(
-                "id_a",
-                "id_b",
-                (
-                    F.size(F.array_intersect("a.sh", "b.sh")).cast("double")
-                    / F.size(F.array_union("a.sh", "b.sh"))
-                ).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
-
-    return _verify(cand_xxh, "hs_xxh"), _verify(cand_md5, "hs_md5")
 
 
 def simhash(col: Column, bits: int = 32, tokenize: str = "word") -> Column:
@@ -967,13 +858,13 @@ def ngram_jaccard_pairs(
     # (quadratic) pair-join compares longs. Collisions are ~2^-60 and
     # the oracle hashes identically, so results are unchanged. The
     # hashing happens INSIDE the Arrow shingle pass (r15 opt, second
-    # wave: _hashed_shingles_udf dedupe="string" — hash60 per DISTINCT
-    # shingle per batch): the old construction shipped the string
-    # arrays through Arrow only to feed an interpreted JVM
-    # transform(hash60) (an md5 + string concat per element — HOF
-    # lambdas never codegen). dedupe="string" keeps the oracle's exact
-    # list_distinct(strings)-then-hash semantics.
-    hashed_set = _hashed_shingles_udf(n, tokenize, dedupe="string")
+    # wave: _hashed_shingles_udf — hash60 per DISTINCT shingle per
+    # batch): the old construction shipped the string arrays through
+    # Arrow only to feed an interpreted JVM transform(hash60) (an md5 +
+    # string concat per element — HOF lambdas never codegen). The
+    # kernel keeps the oracle's exact list_distinct(strings)-then-hash
+    # semantics.
+    hashed_set = _hashed_shingles_udf(n, tokenize)
     # fan out BELOW the shingle UDF: a small corpus reads as one parquet
     # split and the corpus-wide Arrow shingle pass is the heavy stage —
     # it must run fanned, not single-task (r15 opt; no-op at real scale)

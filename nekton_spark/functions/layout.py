@@ -142,8 +142,8 @@ def _footer_ranges(
         import pyarrow.parquet as pq
     except ImportError:
         return None
-    mins: dict[str, float | int | None] = {c: None for c in cols}
-    maxs: dict[str, float | int | None] = {c: None for c in cols}
+    mins: dict[str, float | None] = {c: None for c in cols}
+    maxs: dict[str, float | None] = {c: None for c in cols}
     ok_types = {"INT32", "INT64", "FLOAT", "DOUBLE"}
     try:
         for f in files:
@@ -164,7 +164,10 @@ def _footer_ranges(
                     st = cc.statistics
                     if st is None or not st.has_min_max:
                         return None
-                    lo, hi = st.min, st.max
+                    # inside the try: a logical type over an INT32/INT64
+                    # (timestamp, date) reads back as datetime/date, not
+                    # a number — the aggregate path handles those
+                    lo, hi = float(st.min), float(st.max)
                     if mins[c] is None or lo < mins[c]:
                         mins[c] = lo
                     if maxs[c] is None or hi > maxs[c]:
@@ -174,7 +177,7 @@ def _footer_ranges(
     if any(mins[c] is None for c in cols):
         # zero data rows: the aggregate path's NULL handling applies
         return None
-    return [(float(mins[c]), float(maxs[c])) for c in cols]
+    return [(mins[c], maxs[c]) for c in cols]
 
 
 def _bucketized_pair(

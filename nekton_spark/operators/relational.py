@@ -19,7 +19,9 @@ Scale notes baked into each operator:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import re
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..registry import SOURCES, register_processor, lookup
@@ -105,6 +107,40 @@ def join_processor(
     return df.join(right, on, how)
 
 
+_SORT_KEY = re.compile(
+    r"^\s*(?P<expr>\S.*?)(?:\s+(?P<dir>ASC|DESC))?"
+    r"(?:\s+NULLS\s+(?P<nulls>FIRST|LAST))?\s*$",
+    re.IGNORECASE | re.DOTALL,
+)
+
+
+def _sort_key(df: DataFrame, spec: str) -> Column:
+    """One ``order_by``/``by`` entry — ``<expr> [ASC|DESC] [NULLS
+    FIRST|LAST]``, the SQL sort-key grammar — as a sort Column.
+
+    ``F.expr`` cannot take the direction: ``F.expr("v DESC")`` parses
+    as the ALIAS ``v AS DESC`` and sorts ascending without a word. So
+    the direction and null order are split off here, and an expression
+    that still parses as an alias (``"v descending"``, ``"v AS x"``) is
+    refused instead of silently sorting by ``v`` ascending."""
+    m = _SORT_KEY.match(spec)
+    if m is None:
+        raise ValueError(f"empty sort key {spec!r}")
+    expr = m["expr"]
+    parser = df.sparkSession._jsparkSession.sessionState().sqlParser()
+    if parser.parseExpression(expr).getClass().getSimpleName() == "Alias":
+        raise ValueError(
+            f"sort key {spec!r}: expected <expr> [ASC|DESC] [NULLS FIRST|LAST]"
+        )
+    desc = (m["dir"] or "asc").lower() == "desc"
+    # SQL defaults: ASC sorts NULLs first, DESC sorts them last
+    nulls_first = (m["nulls"] or ("last" if desc else "first")).lower() == "first"
+    c = F.expr(expr)
+    if desc:
+        return c.desc_nulls_first() if nulls_first else c.desc_nulls_last()
+    return c.asc_nulls_first() if nulls_first else c.asc_nulls_last()
+
+
 @register_processor("aggregate")
 def aggregate_processor(
     df: DataFrame,
@@ -136,7 +172,7 @@ def window_processor(
 ) -> DataFrame:
     """Analytic window functions. ``exprs`` maps output column → SQL
     window function (without the OVER clause)."""
-    w = Window.partitionBy(*partition_by).orderBy(*[F.expr(o) for o in order_by])
+    w = Window.partitionBy(*partition_by).orderBy(*[_sort_key(df, o) for o in order_by])
 
     def _bound(b):
         return {
@@ -165,13 +201,13 @@ def topk_processor(
     each partition sorts locally and the filter prunes early.
     """
     fn = F.dense_rank() if dense else F.row_number()
-    w = Window.partitionBy(*partition_by).orderBy(*[F.expr(o) for o in order_by])
+    w = Window.partitionBy(*partition_by).orderBy(*[_sort_key(df, o) for o in order_by])
     return df.withColumn("__rk", fn.over(w)).filter(F.col("__rk") <= k).drop("__rk")
 
 
 @register_processor("sort")
 def sort_processor(df: DataFrame, by: list[str]) -> DataFrame:
-    return df.orderBy(*[F.expr(b) for b in by])
+    return df.orderBy(*[_sort_key(df, b) for b in by])
 
 
 @register_processor("limit")

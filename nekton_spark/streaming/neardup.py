@@ -38,10 +38,10 @@ from ..materialize import materialize
 from ..functions.dedup import (
     DEFAULT_BANDS,
     DEFAULT_K,
+    _md5_doc_sets,
     _minhash_sig_udf,
-    _sig_and_hashed_shingles_udf,
+    band_keys,
 )
-from ..functions.hashing import hash60
 
 __all__ = ["streaming_minhash_near_dup"]
 
@@ -101,40 +101,38 @@ def streaming_minhash_near_dup(
     # business) and at real scale (natural splits exceed the target).
     from nekton_spark.functions.similarity import ensure_parallelism
 
-    df = ensure_parallelism(df)
-    if verify == "exact":
-        # one Arrow pass yields the signature AND the dictionary-
-        # encoded (60-bit hashed) shingle set — 8 bytes/shingle of
-        # join state instead of the shingle string
-        both = _sig_and_hashed_shingles_udf(k, shingle_n)
-        base = (
-            df.select(
-                F.col(id_col).alias("id"),
-                F.col(ts_col).alias("ts"),
-                both(F.col(text_col)).alias("_sg"),
-            )
-            .select("id", "ts", F.col("_sg.sig").alias("sig"), F.col("_sg.hs").alias("sh"))
-            .filter(F.col("sig").isNotNull())
-        )
-    else:
-        sig_udf = _minhash_sig_udf(k, shingle_n)
-        base = df.select(
+    from .windows import ensure_event_time
+
+    # ts normalized up front: a TIMESTAMP_NTZ batch input must reach
+    # the pinned representation (and the unix_micros cell arithmetic
+    # below) as TIMESTAMP, matching the streaming twin's emitted type
+    proj = ensure_event_time(
+        ensure_parallelism(df).select(
             F.col(id_col).alias("id"),
             F.col(ts_col).alias("ts"),
-            sig_udf(F.col(text_col)).alias("sig"),
-        ).filter(F.col("sig").isNotNull())
-    band_array = F.array(
-        *[
-            hash60(F.concat_ws(",", F.slice("sig", b * r + 1, r)), 1000 + b)
-            for b in range(bands)
-        ]
+            F.col(text_col).alias("_txt"),
+        ),
+        "ts",
     )
+    if verify == "exact":
+        # the md5 engine's one-pass (sig, sh) representation — the
+        # dictionary-encoded (60-bit hashed) shingle set is 8
+        # bytes/shingle of join state instead of the shingle string;
+        # pinned on a batch frame so the Arrow UDF runs once for every
+        # branch below (two join sides + two fetches)
+        base = _md5_doc_sets(proj, "_txt", "id", k, shingle_n, carry=("ts",))
+    else:
+        base = proj.select(
+            "id", "ts", _minhash_sig_udf(k, shingle_n)(F.col("_txt")).alias("sig")
+        )
+        if not df.isStreaming:
+            base = base.transform(materialize)
+    # a doc without shingles (NULL sig) explodes to no band rows
+    band_array = band_keys("sig", k, bands)
     if df.isStreaming:
-        from .windows import ensure_event_time
-
         carried = ["id", "ts", "sig"] + (["sh"] if verify == "exact" else [])
         banded = base.select(*carried, F.posexplode(band_array).alias("band", "bh"))
-        banded = ensure_event_time(banded, "ts").withWatermark("ts", delay)
+        banded = banded.withWatermark("ts", delay)
         # the explicit two-sided time bound is what lets the stream-stream
         # join evict buffered rows once the watermark passes the horizon.
         # stream-stream join carries the full state (sig[, sh]) through
@@ -212,14 +210,9 @@ def streaming_minhash_near_dup(
     # Candidate pairs are then
     # DISTINCT'd (pair-scale, replacing the streaming first-shared-band
     # collapse) and the state table joins back ONCE per side by id to
-    # score. The eager materialize pins base so the Arrow UDF runs
-    # once and every branch (two join sides + two fetches) reads the
-    # same materialization — it also normalizes a TIMESTAMP_NTZ batch
-    # input (ensure_event_time) so the unix_micros cell arithmetic and
-    # the emitted ts type match the streaming twin.
-    from .windows import ensure_event_time
-
-    base = ensure_event_time(base, "ts").transform(materialize)
+    # score. base is pinned above, so the Arrow UDF ran once and every
+    # branch (two join sides + two fetches) reads the same
+    # materialization.
     h_us = F.unix_micros(
         F.expr(f"TIMESTAMP '1970-01-01 00:00:00Z' + INTERVAL {delay}")
     )

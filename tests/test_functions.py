@@ -272,20 +272,23 @@ class TestDedup:
         assert script_spread_py("plain ascii text") == "plain ascii text"
 
     def test_hashed_shingles_udf_matches_jvm_expr(self, spark):
-        """r15 opt (verify-stage kernel swap): the Arrow batch kernel
-        `_hashed_shingles_udf` must produce the SAME hashed-shingle SET
-        as the JVM `array_distinct(transform(shingles, hash60))`
-        expression it replaces on the md5 engine — over the
-        NULL/empty/whitespace-edged battery, CJK under both tokenize
-        policies, and a shared-shingle clique (the batch-memo path).
-        Element order may differ (first-occurrence-of-hash vs of-gram);
-        the verify stage consumes only |∩|/|∪| sizes, so the pin is
-        sorted-set equality."""
+        """The md5 engine's verify sets — the `hs` output of the
+        one-pass substrate kernel `_sig_and_hashed_shingles_udf` — must
+        be the SAME hashed-shingle SET as the JVM
+        `array_distinct(transform(shingles, hash60))` expression, over
+        the NULL/empty/whitespace-edged battery, CJK under both
+        tokenize policies, and a shared-shingle clique (the batch-memo
+        path). Element order may differ (first-occurrence-of-hash vs
+        of-gram); the verify stage consumes only |∩|/|∪| sizes, so the
+        pin is sorted-set equality. `_hashed_shingles_udf` (the
+        inverted-index kernel) must match its string-dedupe JVM twin
+        element for element."""
         from pyspark.sql import functions as F
 
         from nekton_spark.functions.dedup import (
             _hashed_shingles_udf,
             _shingles_expr,
+            _sig_and_hashed_shingles_udf,
         )
         from nekton_spark.functions.hashing import hash60
 
@@ -318,16 +321,16 @@ class TestDedup:
             arrow = d.select(
                 "doc_id",
                 F.array_sort(
-                    _hashed_shingles_udf(3, tok)(F.col("text"))
+                    _sig_and_hashed_shingles_udf(16, 3, tok)(F.col("text")).hs
                 ).alias("sh"),
             )
             got = {r.doc_id: r.sh for r in arrow.collect()}
             want = {r.doc_id: r.sh for r in jvm.collect()}
             assert got == want, tok
             assert got[5] == [] and got[9] == got[10] != []
-            # dedupe="string" ≙ transform(array_distinct(sh), hash60)
-            # — the inverted-index plan's (and its oracle's) exact
-            # construction: distinct STRINGS each hashed, in
+            # _hashed_shingles_udf ≙ transform(array_distinct(sh),
+            # hash60) — the inverted-index plan's (and its oracle's)
+            # exact construction: distinct STRINGS each hashed, in
             # first-occurrence-of-string order
             jvm_s = d.select(
                 "doc_id",
@@ -338,9 +341,7 @@ class TestDedup:
             )
             arrow_s = d.select(
                 "doc_id",
-                _hashed_shingles_udf(3, tok, dedupe="string")(
-                    F.col("text")
-                ).alias("sh"),
+                _hashed_shingles_udf(3, tok)(F.col("text")).alias("sh"),
             )
             got_s = {r.doc_id: r.sh for r in arrow_s.collect()}
             want_s = {r.doc_id: r.sh for r in jvm_s.collect()}
@@ -467,6 +468,36 @@ class TestDedup:
                 assert got_x == want_x, (tok, thr)
                 assert got_m == want_m, (tok, thr)
                 assert got_m, (tok, thr)  # non-vacuous: clique mined
+
+    def test_minhash_md5_one_substrate_pin(self, spark, monkeypatch):
+        """The md5 chain shingles each document ONCE: one pinned
+        (id, sig, sh) representation feeds both banding and exact
+        verify, plus the candidate pin — at most 2 pins and 1 Arrow
+        pass across every pinned plan and the final plan."""
+        from nekton_spark import plans
+        from nekton_spark.functions import dedup
+
+        pinned: list[str] = []
+        real = dedup.materialize
+
+        def counting(df, *a, **kw):
+            pinned.append(plans.simple_plan(df))
+            return real(df, *a, **kw)
+
+        monkeypatch.setattr(dedup, "materialize", counting)
+        texts = (
+            ["the quick brown fox jumps over the lazy dog today"] * 3
+            + ["the quick brown fox jumps over the lazy dog tomorrow"]
+            + ["pack my box with five dozen liquor jugs now"] * 2
+            + ["another completely different text entirely here right now"]
+        )
+        out = dedup.minhash_lsh_pairs(docs_df(spark, texts), threshold=0.5)
+        arrow = sum(p.count("ArrowEvalPython") for p in pinned)
+        arrow += plans.simple_plan(out).count("ArrowEvalPython")
+        rows = {(r.id_a, r.id_b) for r in out.collect()}
+        assert {(0, 1), (0, 2), (1, 2), (4, 5)} <= rows
+        assert len(pinned) <= 2, len(pinned)
+        assert arrow <= 1, arrow
 
     def test_minhash_xxhash64_signature_shape(self, spark):
         from nekton_spark.functions.dedup import DEFAULT_K, minhash_signatures

@@ -135,6 +135,41 @@ class TestStatlessRowGroups:
         assert (match, total) == (1, 1)
 
 
+class TestFooterRangeFallback:
+    def test_timestamp_column_falls_back_to_aggregate(self, spark, tmp_path):
+        """A pyarrow timestamp[us] column is INT64 physically, so it
+        passes the footer fast path's type gate, but its statistics
+        come back as datetimes. The keys must fall back to the min/max
+        aggregate (the same keys an in-memory copy of the frame gets),
+        not raise TypeError."""
+        import datetime as dt
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from nekton_spark.functions.layout import hilbert_value
+
+        t0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+        t = pa.table(
+            {
+                "id": pa.array(range(6), type=pa.int64()),
+                "ts": pa.array(
+                    [t0 + dt.timedelta(hours=7 * i) for i in range(6)],
+                    type=pa.timestamp("us", tz="UTC"),
+                ),
+                "v": pa.array([3, 1, 4, 1, 5, 9], type=pa.int64()),
+            }
+        )
+        p = str(tmp_path / "ts.parquet")
+        pq.write_table(t, p)
+        df = spark.read.parquet(p)
+        mem = spark.createDataFrame(df.collect(), df.schema)
+        for key in (z_value, hilbert_value):
+            got = {r.id: r[-1] for r in key(df, "ts", "v").collect()}
+            want = {r.id: r[-1] for r in key(mem, "ts", "v").collect()}
+            assert got == want and len(set(got.values())) > 1, key.__name__
+
+
 class TestHilbertKey:
     def test_table_matches_xy2d_exhaustively(self):
         """The derived 4-state machine IS xy2d: every point of the

@@ -455,7 +455,7 @@ PLAN_BUDGET = {
     "embedding_pca": (0, 0),
     "embedding_outliers": (1, 0),
     "bloom_decontamination": (0, 3),
-    "fuzzy_decontamination": (3, 4),
+    "fuzzy_decontamination": (0, 1),
     "lang_id_trained": (1, 0),
     "dsir_select": (0, 5),
     "tfidf_top_terms": (0, 4),

@@ -1,9 +1,14 @@
 """Relational spec-operator tests: join strategies (broadcast, salted),
 aggregates, set ops — correctness under each physical strategy."""
 
+import pytest
 from pyspark.sql import functions as F
 
-from nekton_spark.operators.relational import join_processor
+from nekton_spark.operators.relational import (
+    join_processor,
+    sort_processor,
+    topk_processor,
+)
 from nekton_spark.spec import Spec, compile_spec
 
 
@@ -103,7 +108,35 @@ output:
             ),
         )
         rows = df.collect()
-        assert all(abs(r.c_acctbal - r.best_bal) < 1e-9 for r in rows)
+        # under the default frame max(c_acctbal) at rn = 1 is the row's
+        # own value whatever the order — compare against the per-nation
+        # maximum instead, which holds only if "DESC" really sorts
+        # descending
+        cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+        want = {
+            r.c_nationkey: r.m
+            for r in cust.groupBy("c_nationkey").agg(F.max("c_acctbal").alias("m")).collect()
+        }
+        assert {r.c_nationkey: r.c_acctbal for r in rows} == want
+
+    def test_sort_keys_honour_direction_and_nulls(self, spark):
+        df = spark.createDataFrame(
+            [(1, 3), (1, None), (1, 1), (2, 2)], "g int, v int"
+        )
+
+        def vs(out):
+            return [r.v for r in out.collect()]
+
+        assert vs(sort_processor(df, ["v DESC"])) == [3, 2, 1, None]
+        assert vs(sort_processor(df, ["v desc nulls first"])) == [None, 3, 2, 1]
+        assert vs(sort_processor(df, ["v"])) == [None, 1, 2, 3]
+        assert vs(sort_processor(df, ["v ASC NULLS LAST"])) == [1, 2, 3, None]
+        assert vs(sort_processor(df, ["g DESC", "v + 0 DESC"])) == [2, 3, 1, None]
+        top = topk_processor(df, ["g"], ["v DESC"], k=1)
+        assert sorted(vs(top)) == [2, 3]
+        for bad in ("v descending", "v AS x", "   "):
+            with pytest.raises(ValueError, match="sort key"):
+                sort_processor(df, [bad])
 
     def test_union_and_except(self, spark, sf_dir):
         df, _ = compile_spec(
